@@ -167,16 +167,6 @@ def _cc_star(g: Graph, runner: SuperstepRunner, max_iter: int) -> DataFrame:
                       finalize_fn=finalize_fn)
 
 
-def _global_fp(runner: SuperstepRunner, k: int):
-    """XOR of per-partition fingerprints recorded for iteration k (order
-    independent content hash of the state)."""
-    fp = 0
-    for m in runner.history:
-        if m["iter"] == k and "fingerprint" in m:
-            fp ^= m["fingerprint"]
-    return fp
-
-
 def component_sizes(labels: DataFrame) -> DataFrame:
     """Partition::subsetSizeMap (/root/reference/networkit/cpp/structures/
     Partition.h:252) — (component, size)."""

@@ -15,6 +15,10 @@ A ``Scratch`` also fuses change-detection into the cut: ``cut_observed``
 collects aggregate metrics (row counts, changed counts) as
 ``df.observe`` observation metrics in the SAME job as the parquet
 write, so loop conditions cost zero extra actions.
+
+``write_cut`` is the one lineage-cut primitive shared by ``Scratch`` and
+the SuperstepRunner: the read-back scan carries the written schema, so
+it plans without the schema-inference job a bare ``read.parquet`` runs.
 """
 
 from __future__ import annotations
@@ -23,6 +27,13 @@ import os
 import uuid
 
 from pyspark.sql import DataFrame, Observation, SparkSession
+
+
+def write_cut(df: DataFrame, path: str) -> DataFrame:
+    """Write ``df`` to parquet at ``path`` and return a fresh scan of
+    it: the lineage cut. ``path`` must not be an input of ``df``."""
+    df.write.mode("overwrite").parquet(path)
+    return df.sparkSession.read.schema(df.schema).parquet(path)
 
 
 def state_root() -> str:
@@ -47,13 +58,13 @@ class Scratch:
         self._n = 0
 
     def _path(self, name: str | None) -> str:
+        """A path no earlier cut used: the counter is always part of it,
+        so a cut never overwrites a scan that its own input reads."""
         self._n += 1
-        return "%s/%s" % (self.dir, name or "s%d" % self._n)
+        return "%s/%s-%d" % (self.dir, name or "s", self._n)
 
     def cut(self, df: DataFrame, name: str | None = None) -> DataFrame:
-        path = self._path(name)
-        df.write.mode("overwrite").parquet(path)
-        return self.spark.read.parquet(path)
+        return write_cut(df, self._path(name))
 
     def cut_observed(self, df: DataFrame, aggs: list,
                      keep: list[str] | None = None,
@@ -67,8 +78,7 @@ class Scratch:
         out = df.observe(obs, *aggs)
         if keep is not None:
             out = out.select(*keep)
-        out.write.mode("overwrite").parquet(path)
-        return self.spark.read.parquet(path), obs.get
+        return write_cut(out, path), obs.get
 
     def cleanup(self) -> None:
         try:

@@ -27,16 +27,20 @@ local layout is Iceberg-style parquet + manifests:
     {state_dir}/{job_id}/metrics.jsonl               (one row per superstep)
     {state_dir}/{job_id}/partitions.jsonl            (per-partition lineage)
 
-Cost model: ONE action per durable superstep — the checkpoint write carries
+Cost model: ONE action per superstep — the checkpoint write carries
 the convergence aggregates as ``df.observe`` observation metrics (row
 count, order-independent bit_xor(xxhash64) content fingerprint, l1/l2/
 changed norms), and per-partition lineage comes from the written parquet
 file footers (rows + bytes per file — exactly what an Iceberg manifest
-records), costing no extra job. Kernels report convergence through
-reserved state columns: ``_delta`` (new−old per vertex → l1/l2 norms) and
+records), costing no extra job. The read-back scan is given the written
+schema (``plans.scratch.write_cut``), so it plans without a
+schema-inference job; only a resume, which has no schema in hand, reads
+its last ``iter=`` dir plainly. With AQE every query stage still counts
+as a Spark job: a PageRank superstep on a small graph runs 3 (see
+``operators.pagerank``). Kernels report convergence through reserved
+state columns: ``_delta`` (new−old per vertex → l1/l2 norms) and
 ``_changed`` (0/1 per vertex → changed count); both land in metrics.jsonl
-every superstep. persist-only supersteps (checkpoint_interval > 1) use a
-separate measuring aggregation, which doubles as their materialization.
+every superstep.
 """
 
 from __future__ import annotations
@@ -50,6 +54,8 @@ from typing import Callable
 
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
+from networkit_spark.plans.scratch import state_root, write_cut
+
 METRIC_COLS = ("_delta", "_changed", "_norm2")
 
 
@@ -62,19 +68,10 @@ class SuperstepRunner:
         resume: bool = True,
         retain: int | None = None,
         ephemeral: bool = False,
-        checkpoint_interval: int | None = None,
     ):
         """``ephemeral=True`` puts state in a throwaway temp dir (unit
         tests / anonymous runs); ``retain=k`` keeps only the latest k
-        iteration checkpoints (production space bound).
-
-        ``checkpoint_interval`` (default env NKS_CKPT_INTERVAL or 1):
-        durable parquet checkpoints every k-th superstep; in between the
-        state is persist()-ed only (convergence metrics + per-partition
-        lineage are still recorded EVERY superstep). Resume restarts from
-        the last durable iteration and deterministically replays at most
-        k-1 supersteps. Intervals > 1 trade resume granularity for wall
-        time on overhead-bound (small-state) workloads."""
+        iteration checkpoints (production space bound)."""
         self.spark = spark
         self.job_id = job_id
         if ephemeral:
@@ -82,7 +79,6 @@ class SuperstepRunner:
             # driver /tmp) so ephemeral runs stay cluster-portable
             import uuid
 
-            from networkit_spark.plans.scratch import state_root
             state_dir = "%s/ephemeral/%s" % (
                 state_root().rstrip("/"), uuid.uuid4().hex[:12])
             resume = False
@@ -91,9 +87,6 @@ class SuperstepRunner:
         self.resume = resume
         self.retain = retain
         self.ephemeral = ephemeral
-        if checkpoint_interval is None:
-            checkpoint_interval = int(os.environ.get("NKS_CKPT_INTERVAL", "1"))
-        self.checkpoint_interval = max(1, checkpoint_interval)
         self.history: list[dict] = []
         self.resumed_from: int | None = None
 
@@ -118,47 +111,6 @@ class SuperstepRunner:
         with open(os.path.join(self.job_dir, fname), "a") as f:
             for r in rows:
                 f.write(json.dumps(r) + "\n")
-
-    # -- fused metrics + lineage pass -------------------------------------
-
-    def _measure(self, state: DataFrame, k: int) -> dict:
-        """One aggregation over the checkpointed state: per-partition
-        lineage (rows + fingerprint) and global convergence metrics."""
-        public = [c for c in state.columns if not c.startswith("_")]
-        aggs = [
-            F.count(F.lit(1)).alias("rows"),
-            F.bit_xor(F.xxhash64(*[F.col(c) for c in public])).alias("fingerprint"),
-        ]
-        cols = set(state.columns)
-        if "_delta" in cols:
-            aggs.append(F.sum(F.col("_delta") * F.col("_delta")).alias("sq"))
-            aggs.append(F.sum(F.abs(F.col("_delta"))).alias("ab"))
-        if "_changed" in cols:
-            aggs.append(F.sum(F.col("_changed").cast("long")).alias("chg"))
-        if "_norm2" in cols:
-            aggs.append(F.sum(F.col("_norm2")).alias("n2"))
-        rows = state.groupBy(F.spark_partition_id().alias("pid")).agg(*aggs).collect()
-
-        lineage = [
-            {"job_id": self.job_id, "iter": k, "pid": int(r["pid"]),
-             "rows": int(r["rows"]), "fingerprint": int(r["fingerprint"])}
-            for r in rows
-        ]
-        self._append_jsonl("partitions.jsonl", lineage)
-
-        fp = 0
-        for r in rows:
-            fp ^= int(r["fingerprint"])
-        metrics: dict = {"rows": sum(r["rows"] for r in rows), "fingerprint": fp}
-        if "_delta" in cols:
-            sq = sum(float(r["sq"] or 0.0) for r in rows)
-            metrics["l2_delta"] = sq ** 0.5
-            metrics["l1_delta"] = sum(float(r["ab"] or 0.0) for r in rows)
-        if "_changed" in cols:
-            metrics["changed"] = sum(int(r["chg"] or 0) for r in rows)
-        if "_norm2" in cols:
-            metrics["norm2"] = sum(float(r["n2"] or 0.0) for r in rows)
-        return metrics
 
     # -- the loop ----------------------------------------------------------
 
@@ -195,47 +147,27 @@ class SuperstepRunner:
                         return self._finish(state, finalize_fn)
 
         if state is None:
-            state = self._checkpoint(init_fn(), -1)
+            state = write_cut(init_fn(), os.path.join(self.job_dir, "init"))
 
         k = start_k
-        last_ckpt = None
         while k < max_iter:
             t0 = time.monotonic()
-            durable = (k + 1) % self.checkpoint_interval == 0
-            if durable:
-                # ONE action: the checkpoint write carries the convergence
-                # aggregates as observation metrics; per-partition lineage
-                # comes from the written parquet footers (no extra job).
-                new_state, metrics = self._checkpoint_observed(
-                    step_fn(state, k), k)
-                last_ckpt = k
-            else:
-                new_state = step_fn(state, k).persist()
-                metrics = self._measure(new_state, k)
+            # ONE action: the checkpoint write carries the convergence
+            # aggregates as observation metrics; per-partition lineage
+            # comes from the written parquet footers (no extra job).
+            new_state, metrics = self._checkpoint_observed(
+                step_fn(state, k), k)
             metrics["wall_ms"] = int((time.monotonic() - t0) * 1000)
             self._append_jsonl("metrics.jsonl",
                                [{"job_id": self.job_id, "iter": k, **metrics}])
             self._gc(k)
-            state.unpersist()
             state = new_state
             self.history.append({"job_id": self.job_id, "iter": k, **metrics})
             if stop_fn(metrics, k):
                 break
             k += 1
 
-        # make the final state durable so resume sees the converged result
-        if last_ckpt != min(k, max_iter - 1) and not self.ephemeral:
-            state = self._checkpoint(state, min(k, max_iter - 1))
-
         return self._finish(state, finalize_fn)
-
-    def _checkpoint(self, df: DataFrame, k: int) -> DataFrame:
-        """Write iteration state to parquet and return the read-back scan —
-        the lineage cut AND the durable checkpoint in one mechanism.
-        ``k=-1`` holds the init state."""
-        path = self._iter_dir(k) if k >= 0 else os.path.join(self.job_dir, "init")
-        df.write.mode("overwrite").parquet(path)
-        return self.spark.read.parquet(path)
 
     def _checkpoint_observed(self, df: DataFrame, k: int):
         """Checkpoint write with fused observation metrics (convergence
@@ -257,7 +189,7 @@ class SuperstepRunner:
             aggs.append(F.sum(F.col("_norm2")).alias("n2"))
         obs = Observation(f"iter{k}")
         path = self._iter_dir(k)
-        df.observe(obs, *aggs).write.mode("overwrite").parquet(path)
+        state = write_cut(df.observe(obs, *aggs), path)
         got = obs.get
 
         metrics: dict = {"rows": int(got["rows"] or 0),
@@ -285,7 +217,7 @@ class SuperstepRunner:
             pass
         if lineage:
             self._append_jsonl("partitions.jsonl", lineage)
-        return self.spark.read.parquet(path), metrics
+        return state, metrics
 
     def _gc(self, k: int) -> None:
         if self.retain is None:

@@ -40,8 +40,9 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
-        # Iterative kernels re-evaluate lineage unless cut; we localCheckpoint,
-        # so keep cleaner aggressive about shuffle files.
+        # Iterative kernels cut lineage every round with a parquet round-trip
+        # (plans.scratch.write_cut), so each round's shuffle files become
+        # garbage once the cut is read; clean them without blocking.
         .config("spark.cleaner.referenceTracking.blocking", "false")
         .config("spark.ui.enabled", os.environ.get("NKS_SPARK_UI", "false"))
         .config("spark.driver.memory", os.environ.get("NKS_DRIVER_MEM", "8g"))

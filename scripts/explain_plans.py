@@ -55,19 +55,19 @@ def main() -> None:
     # 3. one PageRank superstep: join strategy + partial aggregation
     g = TG.graph_customer_supplier(spark, sf)
     n = g.num_vertices()
-    coef = _coef_edges(g, 0.85).repartition("src").persist()
+    coef = _coef_edges(g, 0.85).persist()
     coef.count()
     ranks = g.vertices.select("id", F.lit(1.0 / n).alias("rank"))
-    gathered = (
+    msgs = (
         coef.join(ranks.withColumnRenamed("id", "src"), "src")
-        .groupBy("dst").agg(F.sum(F.col("coef") * F.col("rank")).alias("mass"))
+        .select(F.col("dst").alias("id"), (F.col("coef") * F.col("rank")).alias("mass"))
     )
     new = (
-        g.vertices.join(gathered.withColumnRenamed("dst", "id"), "id", "left")
-        .select("id", (F.coalesce("mass", F.lit(0.0)) + F.lit(0.15 / n)).alias("rank"))
+        msgs.unionByName(ranks.select("id", F.lit(0.0).alias("mass")))
+        .groupBy("id").agg((F.sum("mass") + F.lit(0.15 / n)).alias("rank"))
     )
     show("PageRank superstep (check: InMemoryTableScan for coef; "
-         "partial+final HashAggregate)", new)
+         "partial+final HashAggregate over the message/self-row union)", new)
 
     # 4. triangle wedge join: orientation before the self-join
     gpp = TG.graph_part_part(spark, sf)

@@ -3,6 +3,7 @@ with per-partition lineage + metrics)."""
 
 import json
 import os
+import time
 
 import numpy as np
 import pytest
@@ -114,3 +115,135 @@ def test_power_iteration_one_action_per_superstep(spark):
     # agg+collect query (~3-4 more jobs) per superstep → ~70+ total
     jobs = sc.statusTracker().getJobIdsForGroup("eigen-jobcount")
     assert len(jobs) <= 55, f"{len(jobs)} jobs for 6 supersteps"
+
+
+# ---- Spark job counts and cached-table lifetime -----------------------------
+
+def _random_graph(spark, n=200, m=1200, seed=7):
+    """Directed random graph with a few isolated and teleport-only
+    vertices (ids >= n - 5 get no edges)."""
+    rng = np.random.default_rng(seed)
+    src = rng.integers(0, n - 5, m)
+    dst = rng.integers(0, n - 5, m)
+    rows = sorted({(int(u), int(v)) for u, v in zip(src, dst) if u != v})
+    return Graph.from_rows(spark, rows, directed=True, n=n)
+
+
+def _job_counts(sc, groups):
+    """Spark jobs per job group, read through the public status tracker
+    once a sentinel job shows that the listener has caught up."""
+    sentinel = "flush-%d" % time.monotonic_ns()
+    sc.setJobGroup(sentinel, sentinel)
+    sc.parallelize([0], 1).count()
+    tracker = sc.statusTracker()
+    for _ in range(200):
+        if tracker.getJobIdsForGroup(sentinel):
+            break
+        time.sleep(0.05)
+    sc.setLocalProperty("spark.jobGroup.id", None)
+    return {g: len(tracker.getJobIdsForGroup(g)) for g in groups}
+
+
+class _GroupPerSuperstep(SuperstepRunner):
+    """Tags each superstep's Spark work with its own job group. The
+    metrics row of superstep k lands right after its checkpoint write and
+    before superstep k+1 starts, so switching the group there attributes
+    every job to the superstep that ran it."""
+
+    def _append_jsonl(self, fname, rows):
+        super()._append_jsonl(fname, rows)
+        if fname == "metrics.jsonl":
+            group = "%s-%d" % (self.job_id, rows[-1]["iter"] + 1)
+            self.spark.sparkContext.setJobGroup(group, group)
+
+
+def test_pagerank_superstep_job_count(spark, tmp_path):
+    """A steady-state PageRank superstep is one checkpoint write: with AQE
+    it runs 3 Spark jobs (the rank-vector broadcast, the message
+    shuffle, the write). A schema-inference read-back or a join back to
+    the old ranks shows up here as extra jobs."""
+    g = _random_graph(spark)
+    g.num_vertices()
+    sc = spark.sparkContext
+    runner = _GroupPerSuperstep(spark, "pr-jobs", state_dir=str(tmp_path))
+    sc.setJobGroup("pr-jobs-0", "pr-jobs-0")
+    try:
+        pagerank(g, tol=1e-12, max_iter=6, runner=runner)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(runner.history) == 6
+    steady = ["pr-jobs-%d" % k for k in range(1, 6)]
+    counts = _job_counts(sc, steady)
+    assert all(1 <= c <= 3 for c in counts.values()), counts
+
+
+def test_scratch_cut_reads_back_without_a_job(spark):
+    from pyspark.sql import functions as F
+
+    from networkit_spark.plans.scratch import Scratch
+
+    df = spark.range(40, numPartitions=2).select(
+        "id", (F.col("id") * 0.5).alias("x"),
+        F.col("id").cast("string").alias("s"),
+        F.array("id", F.lit(7)).alias("a"))
+    sc = spark.sparkContext
+    with Scratch(spark, "cut-jobs") as scratch:
+        plain_dir = scratch.dir + "/plain"
+        sc.setJobGroup("cut-plain-write", "cut-plain-write")
+        df.write.parquet(plain_dir)
+        sc.setJobGroup("cut-plain-read", "cut-plain-read")
+        plain = spark.read.parquet(plain_dir)
+        sc.setJobGroup("cut", "cut")
+        out = scratch.cut(df)
+        counts = _job_counts(sc, ["cut-plain-write", "cut-plain-read", "cut"])
+        # the plain read infers the schema with a job; the cut's read-back
+        # carries the written schema, so the cut costs only its write
+        assert counts["cut-plain-read"] >= 1
+        assert counts["cut"] == counts["cut-plain-write"], counts
+        assert ([(f.name, f.dataType) for f in out.schema]
+                == [(f.name, f.dataType) for f in plain.schema])
+        assert sorted(out.collect()) == sorted(df.collect())
+
+
+def test_scratch_never_reuses_a_path(spark):
+    from networkit_spark.plans.scratch import Scratch
+
+    with Scratch(spark, "cut-names") as scratch:
+        a = scratch.cut(spark.range(3), "st")
+        # re-cutting under the same name must not overwrite the input scan
+        b = scratch.cut(a.selectExpr("id + 10 AS id"), "st")
+        assert sorted(r.id for r in b.collect()) == [10, 11, 12]
+        assert sorted(r.id for r in a.collect()) == [0, 1, 2]
+
+
+class _Boom(Exception):
+    pass
+
+
+class _CrashAfter(SuperstepRunner):
+    """Raises right after superstep 1's metrics row, as a crash would."""
+
+    def _append_jsonl(self, fname, rows):
+        super()._append_jsonl(fname, rows)
+        if fname == "metrics.jsonl" and rows[-1]["iter"] >= 1:
+            raise _Boom()
+
+
+@pytest.mark.parametrize("mode", ["dataframe", "blocks"])
+def test_pagerank_releases_cached_tables(spark, tmp_path, mode):
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+    base = persistent().size()
+    g = _random_graph(spark, n=60, m=300)
+    kw = {"mode": mode}
+    if mode == "blocks":  # small hub threshold: coef_hub is cached too
+        kw.update(hub_threshold=8, num_blocks=4)
+    out = pagerank(g, tol=1e-6, max_iter=4,
+                   runner=SuperstepRunner(spark, "pr-free", state_dir=str(tmp_path)),
+                   **kw)
+    assert out.count() == 60
+    assert persistent().size() == base
+    with pytest.raises(_Boom):
+        pagerank(g, tol=1e-12,
+                 runner=_CrashAfter(spark, "pr-crash", state_dir=str(tmp_path)),
+                 **kw)
+    assert persistent().size() == base
