@@ -989,9 +989,9 @@ def q_partition_sim_pp(spark, sf_dir):
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # Registration order = the driver's CORRECTNESS window (first ~50).
-    # Round-5 rotation: the 23 queries that have never earned a driver
-    # row lead, then core regressions fill the window; the union across
-    # rounds covers all 82.
+    # Round-5 rotation: the queries never checked before round 5 lead,
+    # then core regressions fill the window; the union across rounds
+    # covers every query.
     return {
         # --- never driver-checked through round 4 (rotation block) ---
         "harmonic_pps1": q_harmonic_pps1,

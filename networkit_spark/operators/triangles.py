@@ -1,4 +1,4 @@
-"""Triangle counting via degree-ordered wedge join, plus clustering
+"""Triangle counting from degree-ordered out-lists, plus clustering
 coefficients.
 
 Reference semantics:
@@ -7,8 +7,8 @@ Reference semantics:
     deg(u)>deg(v), ties broken by id. We orient LOW→HIGH by (deg, id)
     (the mirror image, as SURVEY.md §2.4 notes) so each undirected edge
     appears exactly once and out-degree in the oriented graph is bounded
-    by O(√(2m)) — the classical bound that keeps the wedge self-join from
-    exploding on power-law graphs.
+    by O(√(2m)) — the classical bound that keeps every vertex's wedge
+    list small on power-law graphs.
   - Each triangle {u,v,w} is counted once as an oriented wedge
     (u→v, u→w), v<w in the orientation order, closed by oriented edge
     v→w; per-node counts attribute 1 to each corner, matching
@@ -22,12 +22,19 @@ Reference semantics:
     (/root/reference/networkit/cpp/algebraic/algorithms/
     AlgebraicTriangleCounting.h:63-70).
 
-All plans are joins + hash aggregations — no Python in the hot path.
+Plan shape (``triangle_counts``, four shuffles, nothing cached): one
+pass over ``g.edges`` builds each vertex's sorted out-list (two
+shuffles: deduplicate + degree on the first endpoint, then the other
+endpoint's degree); one generator turns every out-list into edge rows
+and wedge rows keyed by the pair they close, and a single keyed shuffle
+keeps the wedges whose key group holds an edge; one ``groupBy("id")``
+over corner rows and 0-rows counts per vertex. No self-join, no Python
+in the hot path.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Window, functions as F
 
 from networkit_spark.graph import Graph
 
@@ -42,75 +49,97 @@ def _distinct_edges(g: Graph) -> DataFrame:
     )
 
 
-def _oriented(g: Graph) -> DataFrame:
-    """Each undirected edge once, oriented low→high by (degree, id)."""
-    e = _distinct_edges(g)
-    deg = (
-        e.select(F.col("lo").alias("id")).union(e.select(F.col("hi").alias("id")))
-        .groupBy("id").agg(F.count(F.lit(1)).alias("deg"))
+def _out_lists(g: Graph) -> DataFrame:
+    """(u, outs: array<long>) — u's out-neighbours, the neighbours after
+    u in (deg, id) order, sorted in that order. Vertices without an
+    out-neighbour have no row.
+
+    Two shuffles over the symmetric simple edge rows (x, y): on x to
+    deduplicate them and count deg(x), then on y, where y sees each
+    neighbour x with deg(x) and its own degree is its row count. No
+    vertex ever holds its full neighbour list."""
+    both = F.explode(F.array(
+        F.struct(F.col("src").alias("x"), F.col("dst").alias("y")),
+        F.struct(F.col("dst").alias("x"), F.col("src").alias("y"))))
+    adj = (
+        g.edges.filter("src != dst").select(both.alias("e")).select("e.x", "e.y")
+        .repartition("x").distinct()
+        .withColumn("deg_x", F.count(F.lit(1)).over(Window.partitionBy("x")))
+        .withColumn("deg_y", F.count(F.lit(1)).over(Window.partitionBy("y")))
     )
-    e = (
-        e.join(deg.withColumnRenamed("id", "lo").withColumnRenamed("deg", "deg_lo"), "lo")
-        .join(deg.withColumnRenamed("id", "hi").withColumnRenamed("deg", "deg_hi"), "hi")
+    after = (F.col("deg_x") > F.col("deg_y")) | (
+        (F.col("deg_x") == F.col("deg_y")) & (F.col("x") > F.col("y"))
     )
-    lo_first = (F.col("deg_lo") < F.col("deg_hi")) | (
-        (F.col("deg_lo") == F.col("deg_hi")) & (F.col("lo") < F.col("hi"))
-    )
-    return e.select(
-        F.when(lo_first, F.col("lo")).otherwise(F.col("hi")).alias("src"),
-        F.when(lo_first, F.col("hi")).otherwise(F.col("lo")).alias("dst"),
-        F.when(lo_first, F.col("deg_hi")).otherwise(F.col("deg_lo")).alias("deg_dst"),
+    return (
+        adj.filter(after)
+        .groupBy(F.col("y").alias("u"))
+        .agg(F.array_sort(F.collect_list(F.struct("deg_x", "x"))).alias("outs"))
+        .select("u", F.transform("outs", lambda o: o["x"]).alias("outs"))
     )
 
 
 def triangle_list(g: Graph) -> DataFrame:
     """(a, b, c) — one row per triangle. a is the (deg,id)-smallest corner;
-    b before c in (deg, id) orientation order."""
-    o = _oriented(g).persist()
-    e1 = o.select(F.col("src").alias("u"), F.col("dst").alias("v"),
-                  F.col("deg_dst").alias("dv"))
-    e2 = o.select(F.col("src").alias("u"), F.col("dst").alias("w"),
-                  F.col("deg_dst").alias("dw"))
-    # wedge (u→v, u→w) with v before w in (deg, id) order
-    wedges = e1.join(e2, "u").filter(
-        (F.col("dv") < F.col("dw"))
-        | ((F.col("dv") == F.col("dw")) & (F.col("v") < F.col("w")))
+    b before c in (deg, id) orientation order.
+
+    Each out-list of u emits an edge row keyed (u, v) for every
+    out-neighbour v, and a wedge row keyed (v, w) carrying u for every
+    out-neighbour pair v before w. After one shuffle on the key, a wedge
+    closes exactly when its key group also holds an edge row."""
+    outs = F.col("outs")
+    k = F.size(outs)
+    edge_rows = F.transform(outs, lambda v: F.struct(
+        F.col("u").alias("k1"), v.alias("k2"), F.lit(None).cast("long").alias("a")))
+    wedge_rows = F.flatten(F.transform(outs, lambda v, i: F.transform(
+        F.slice(outs, i + 2, k - i - 1),
+        lambda w: F.struct(v.alias("k1"), w.alias("k2"), F.col("u").alias("a")))))
+    rows = (
+        _out_lists(g)
+        .select(F.explode(F.concat(edge_rows, wedge_rows)).alias("r"))
+        .select("r.k1", "r.k2", "r.a")
     )
-    closer = o.select(F.col("src").alias("v"), F.col("dst").alias("w"))
-    tris = wedges.join(closer, ["v", "w"]).select(
-        F.col("u").alias("a"), F.col("v").alias("b"), F.col("w").alias("c")
+    closed = F.max(F.col("a").isNull()).over(Window.partitionBy("k1", "k2"))
+    return (
+        rows.withColumn("closed", closed)
+        .filter(F.col("closed") & F.col("a").isNotNull())
+        .select("a", F.col("k1").alias("b"), F.col("k2").alias("c"))
     )
-    return tris
 
 
 def triangle_counts(g: Graph) -> DataFrame:
-    """(id, triangles) for every vertex (0 for triangle-free ones)."""
-    tris = triangle_list(g)
-    corners = (
-        tris.select(F.col("a").alias("id"))
-        .union(tris.select(F.col("b").alias("id")))
-        .union(tris.select(F.col("c").alias("id")))
-    )
-    counts = corners.groupBy("id").agg(F.count(F.lit(1)).alias("triangles"))
+    """(id, triangles) for every vertex (0 for triangle-free ones): one
+    aggregation over a 1-row per triangle corner and a 0-row per edge
+    endpoint and explicit vertex."""
+    corners = triangle_list(g).select(
+        F.explode(F.array("a", "b", "c")).alias("id"), F.lit(1).alias("t"))
+    zeros = g.edges.select(
+        F.explode(F.array("src", "dst")).alias("id"), F.lit(None).cast("int").alias("t"))
+    if g._vertices_extra is not None:  # isolated vertices of an explicit table
+        zeros = zeros.union(g._vertices_extra.select("id", F.lit(None).cast("int")))
     return (
-        g.vertices.join(counts, "id", "left")
-        .select("id", F.coalesce("triangles", F.lit(0)).alias("triangles"))
+        corners.union(zeros)
+        .groupBy("id").agg(F.count("t").alias("triangles"))
     )
 
 
 def triangle_edge_scores(g: Graph) -> DataFrame:
-    """(lo, hi, triangles) per undirected edge — TriangleEdgeScore."""
+    """(lo, hi, triangles) per undirected edge — TriangleEdgeScore: one
+    aggregation over a 1-row per triangle side and a 0-row per stored
+    simple edge."""
     tris = triangle_list(g)
-    pairs = (
-        tris.select(F.col("a").alias("x"), F.col("b").alias("y"))
-        .union(tris.select(F.col("a").alias("x"), F.col("c").alias("y")))
-        .union(tris.select(F.col("b").alias("x"), F.col("c").alias("y")))
-    )
-    canon = pairs.select(F.least("x", "y").alias("lo"), F.greatest("x", "y").alias("hi"))
-    counts = canon.groupBy("lo", "hi").agg(F.count(F.lit(1)).alias("triangles"))
+    sides = tris.select(F.explode(F.array(
+        F.struct(F.col("a").alias("x"), F.col("b").alias("y")),
+        F.struct(F.col("a").alias("x"), F.col("c").alias("y")),
+        F.struct(F.col("b").alias("x"), F.col("c").alias("y")))).alias("s"))
+    ones = sides.select(
+        F.least("s.x", "s.y").alias("lo"), F.greatest("s.x", "s.y").alias("hi"),
+        F.lit(1).alias("t"))
+    zeros = g.edges.filter("src != dst").select(
+        F.least("src", "dst").alias("lo"), F.greatest("src", "dst").alias("hi"),
+        F.lit(None).cast("int").alias("t"))
     return (
-        _distinct_edges(g).join(counts, ["lo", "hi"], "left")
-        .select("lo", "hi", F.coalesce("triangles", F.lit(0)).alias("triangles"))
+        ones.union(zeros)
+        .groupBy("lo", "hi").agg(F.count("t").alias("triangles"))
     )
 
 

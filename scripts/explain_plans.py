@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 from networkit_spark.session import get_spark
 from networkit_spark.graph import Graph
 from networkit_spark.operators.pagerank import _coef_edges
-from networkit_spark.operators.triangles import triangle_list
+from networkit_spark.operators.triangles import triangle_counts
 from networkit_spark.sources import tpch_graph as TG
 from networkit_spark.sources.repos import derive_edges
 
@@ -69,10 +69,11 @@ def main() -> None:
     show("PageRank superstep (check: InMemoryTableScan for coef; "
          "partial+final HashAggregate over the message/self-row union)", new)
 
-    # 4. triangle wedge join: orientation before the self-join
+    # 4. triangle counts: out-lists, keyed wedge closure, one aggregation
     gpp = TG.graph_part_part(spark, sf)
-    show("triangle wedge join (check: no broadcast of big sides; SMJ/SHJ ok)",
-         triangle_list(gpp))
+    show("triangle counts (check: four Exchanges above the edge "
+         "derivation, no self-join, no InMemoryTableScan)",
+         triangle_counts(gpp))
 
     # 5. filter pushdown check on a raw scan
     docs = spark.read.parquet(f"{sf}/documents.parquet")

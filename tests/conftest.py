@@ -2,6 +2,7 @@ from __future__ import annotations
 
 import os
 import sys
+import time
 
 import pytest
 
@@ -60,3 +61,18 @@ def load_karate():
 @pytest.fixture(scope="session")
 def karate():
     return load_karate()
+
+
+def job_counts(sc, groups):
+    """Spark jobs per job group, read through the public status tracker
+    once a sentinel job shows that the listener has caught up."""
+    sentinel = "flush-%d" % time.monotonic_ns()
+    sc.setJobGroup(sentinel, sentinel)
+    sc.parallelize([0], 1).count()
+    tracker = sc.statusTracker()
+    for _ in range(200):
+        if tracker.getJobIdsForGroup(sentinel):
+            break
+        time.sleep(0.05)
+    sc.setLocalProperty("spark.jobGroup.id", None)
+    return {g: len(tracker.getJobIdsForGroup(g)) for g in groups}

@@ -3,7 +3,6 @@ with per-partition lineage + metrics)."""
 
 import json
 import os
-import time
 
 import numpy as np
 import pytest
@@ -11,7 +10,7 @@ import pytest
 from networkit_spark.graph import Graph
 from networkit_spark.operators.pagerank import pagerank
 from networkit_spark.plans.superstep import SuperstepRunner
-from tests.conftest import PR8_EDGES
+from tests.conftest import PR8_EDGES, job_counts
 from tests.oracles import pagerank_ref
 
 
@@ -129,21 +128,6 @@ def _random_graph(spark, n=200, m=1200, seed=7):
     return Graph.from_rows(spark, rows, directed=True, n=n)
 
 
-def _job_counts(sc, groups):
-    """Spark jobs per job group, read through the public status tracker
-    once a sentinel job shows that the listener has caught up."""
-    sentinel = "flush-%d" % time.monotonic_ns()
-    sc.setJobGroup(sentinel, sentinel)
-    sc.parallelize([0], 1).count()
-    tracker = sc.statusTracker()
-    for _ in range(200):
-        if tracker.getJobIdsForGroup(sentinel):
-            break
-        time.sleep(0.05)
-    sc.setLocalProperty("spark.jobGroup.id", None)
-    return {g: len(tracker.getJobIdsForGroup(g)) for g in groups}
-
-
 class _GroupPerSuperstep(SuperstepRunner):
     """Tags each superstep's Spark work with its own job group. The
     metrics row of superstep k lands right after its checkpoint write and
@@ -173,7 +157,7 @@ def test_pagerank_superstep_job_count(spark, tmp_path):
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert len(runner.history) == 6
     steady = ["pr-jobs-%d" % k for k in range(1, 6)]
-    counts = _job_counts(sc, steady)
+    counts = job_counts(sc, steady)
     assert all(1 <= c <= 3 for c in counts.values()), counts
 
 
@@ -195,7 +179,7 @@ def test_scratch_cut_reads_back_without_a_job(spark):
         plain = spark.read.parquet(plain_dir)
         sc.setJobGroup("cut", "cut")
         out = scratch.cut(df)
-        counts = _job_counts(sc, ["cut-plain-write", "cut-plain-read", "cut"])
+        counts = job_counts(sc, ["cut-plain-write", "cut-plain-read", "cut"])
         # the plain read infers the schema with a job; the cut's read-back
         # carries the written schema, so the cut costs only its write
         assert counts["cut-plain-read"] >= 1
